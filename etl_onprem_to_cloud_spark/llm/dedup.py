@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import doc_fingerprint, shingles_from_tokens, tokens
+from ..operators.graph import FixpointNotConverged, count_sum, fixpoint, node_build
+from ..operators.layout import ckpt_partitioned
 
 
 def _exploded_shingles(
@@ -345,7 +347,7 @@ def _verify_build(df: DataFrame) -> DataFrame:
     corpus; the MLlib-twin mis-broadcast lesson), but a
     runtime-measured AQE broadcast stays available only WITHOUT the
     static hint.  One definition so probe scripts can A/B the strategy
-    by monkeypatching (the _node_build pattern)."""
+    by monkeypatching (the operators.graph.node_build pattern)."""
     return df.hint("shuffle_hash")
 
 
@@ -592,23 +594,11 @@ def ngram_jaccard_pairs(
 # 5. Transitive closure: near-dup pairs -> dedup clusters
 # --------------------------------------------------------------------------
 
-def _node_build(df: DataFrame) -> DataFrame:
-    """Join-strategy marker for the node-sized build side of a
-    per-round iterative join (labels / mins): ``shuffle_hash`` (r10).
-    The side derives from a corpus-scaled subtree, so it must never be
-    FORCED to broadcast -- but a runtime-measured AQE broadcast (which
-    ignores this hint when the side measures tiny) stays available.
-    One definition so probe scripts can A/B the strategy by
-    monkeypatching (scripts/ab_iterative_r11.py)."""
-    return df.hint("shuffle_hash")
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 20,
-    on_nonconvergence: str = "raise",
 ) -> DataFrame:
     """Connected components over a pair list -> (node, component), where
     component = min node id reachable through any chain of pairs.  This
@@ -616,28 +606,18 @@ def connected_components(
     but dedup KEEP-decisions must be (A~B, B~C => one survivor among
     {A,B,C}).
 
-    Algorithm: iterative min-label propagation.  Each round joins every
-    node's current label against the (undirected) edge list and keeps
-    the minimum neighbor label; stop when a round changes nothing.
-    Rounds needed = graph diameter (near-dup clusters are shallow -- a
-    handful of rounds).  Each round is one shuffle join + one groupBy;
-    ``localCheckpoint`` truncates the growing lineage so round N does
-    not replay rounds 1..N-1.  Convergence detection is folded into the
-    update itself: the update select carries a per-row changed flag and
-    the round's single action both materializes the (lazy) checkpoint
-    and sums the flag -- one job per round, no extra comparison join.
+    Algorithm: iterative min-label propagation, one
+    ``operators.graph.fixpoint`` superstep per round.  Each round joins
+    every node's current label against the (undirected) edge list and
+    keeps the minimum neighbor label; stop when a round changes nothing
+    (its ``count_sum`` signature repeats).  Rounds needed = graph
+    diameter (near-dup clusters are shallow -- a handful of rounds).
 
     If the loop exits without converging (graph diameter >
     ``max_iterations``), labels would silently split one long chain into
-    several components and transitive dedup would keep extra survivors;
-    ``on_nonconvergence`` makes that explicit: ``"raise"`` (default)
-    raises RuntimeError, ``"warn"`` logs a warning and returns the
-    partial labels.
+    several components and transitive dedup would keep extra survivors,
+    so ``operators.graph.FixpointNotConverged`` is raised.
     """
-    if on_nonconvergence not in ("raise", "warn"):
-        raise ValueError(f"on_nonconvergence must be 'raise' or 'warn', got {on_nonconvergence!r}")
-    from ..operators.layout import ckpt_partitioned
-
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
@@ -646,13 +626,9 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # r11: store the static edge list hash-partitioned by the per-round
-    # join key so every round's label join streams it WITHOUT an
-    # exchange (ckpt_partitioned docstring; a plain checkpoint under
-    # AQE forgets its layout).  The pair build above keeps its own
-    # AQE-on checkpoint -- the partitioned copy is one cheap extra
-    # materialization of the (near-dup-bounded) pair list, paid once
-    # against an edge-wide exchange per round.
+    # The pair build keeps its own AQE-on checkpoint; the partitioned
+    # copy is one cheap extra materialization of the (near-dup-bounded)
+    # pair list, paid once against an edge-wide exchange per round.
     edges = ckpt_partitioned(edges, "dst")
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -660,49 +636,31 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    converged = False
-    for _ in range(max_iterations):
-        # shuffle_hash on the node-sized label side (r10): sort-merge
-        # re-sorted the edge stream every round; labels derive from a
-        # corpus-scaled subtree so they may never broadcast, but their
-        # per-partition hash build is bounded by the node set.
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
-            edges.join(_node_build(labels), edges.dst == labels.node)
+            edges.join(node_build(labels), edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("component").alias("nbr_component"))
         )
-        new_component = F.least(
-            F.col("component"), F.coalesce("nbr_component", F.col("component"))
+        return labels.join(
+            neighbor_min, labels.node == neighbor_min.src, "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("nbr_component", F.col("component"))
+            ).alias("component"),
         )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                new_component.alias("component"),
-                (new_component < F.col("component"))
-                .cast("int")
-                .alias("__changed"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # The one action of the round: materializes the lazy checkpoint
-        # AND evaluates the changed flag in the same job.
-        changed = updated.agg(F.sum("__changed")).first()[0] or 0
-        labels = updated.drop("__changed")
-        if changed == 0:
-            converged = True
-            break
+
+    labels, _, converged = fixpoint(
+        labels, step, max_iterations, signature=count_sum("component")
+    )
     if not converged:
-        msg = (
+        raise FixpointNotConverged(
             f"connected_components did not converge in {max_iterations} "
             "iterations (graph diameter exceeds max_iterations); labels "
             "would split long duplicate chains into multiple components"
         )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels
 
 
@@ -835,7 +793,6 @@ def connected_components_star(
     a_col: str = "id_a",
     b_col: str = "id_b",
     max_iterations: int = 25,
-    on_nonconvergence: str = "raise",
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -855,17 +812,13 @@ def connected_components_star(
       min of the smaller neighborhood.
     Each phase is one groupBy(min) + one re-join + distinct -- the same
     shuffle budget per round as min-label, but geometrically fewer
-    rounds on deep graphs.  localCheckpoint bounds lineage exactly as
-    in connected_components; convergence = the (count, xor-of-hashes)
-    signature of the edge set repeating, one action per round.
+    rounds on deep graphs.  Each round is one ``operators.graph.
+    fixpoint`` superstep; convergence = the (count, sum-of-hashes)
+    signature of the edge set repeating.
 
     At convergence the edge set IS the star forest (child -> root), so
     labels fall out without further joins.
     """
-    if on_nonconvergence not in ("raise", "warn"):
-        raise ValueError(
-            f"on_nonconvergence must be 'raise' or 'warn', got {on_nonconvergence!r}"
-        )
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
@@ -898,7 +851,7 @@ def connected_components_star(
         # groupBy already hash-partitioned on src, so the build side
         # re-reads in place and the edge stream skips its per-phase sort.
         return (
-            both.join(_node_build(mins), "src")
+            both.join(node_build(mins), "src")
             .filter(F.col("dst") > F.col("src"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .distinct()
@@ -911,36 +864,22 @@ def connected_components_star(
         smaller = both.filter(F.col("dst") < F.col("src"))
         mins = smaller.groupBy("src").agg(F.min("dst").alias("m"))
         relink = (
-            smaller.join(_node_build(mins), "src")
+            smaller.join(node_build(mins), "src")
             .filter(F.col("dst") != F.col("m"))
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         self_link = mins.select("src", F.col("m").alias("dst"))
         return relink.unionByName(self_link).distinct()
 
-    sig = _signature(edges)
-    converged = False
-    for _ in range(max_iterations):
-        # Lazy checkpoint: the signature aggregation is the round's ONE
-        # action and materializes the checkpoint in the same job (the
-        # connected_components trick -- no separate eager-materialize
-        # pass per round).
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        new_sig = _signature(edges)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
+    edges, _, converged = fixpoint(
+        edges, lambda e: _small_star(_large_star(e)), max_iterations,
+        signature=_signature,
+    )
     if not converged:
-        msg = (
+        raise FixpointNotConverged(
             f"connected_components_star did not converge in {max_iterations} "
             "iterations; labels may not yet point at the component minimum"
         )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     roots = edges.select(F.col("dst").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )

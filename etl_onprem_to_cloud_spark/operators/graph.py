@@ -1,10 +1,53 @@
-"""Fixed-point (integer-arithmetic) PageRank over an edge DataFrame.
+"""Iterative graph operators: one Pregel-style superstep driver
+(:func:`fixpoint`), the shared co-purchase edge build, and fixed-point
+(integer-arithmetic) PageRank.
 
-PageRank in floating point is NOT reproducible across engines or even
-across reruns at scale: the per-node sum of neighbor contributions is
-order-dependent in IEEE double, and partial-aggregation order changes
-with partitioning.  This implementation therefore runs the entire
-iteration in scaled BIGINT arithmetic:
+Superstep contract (Malewicz et al., "Pregel", SIGMOD 2010).  Every
+iterative graph loop in the package -- min-label and large-star/
+small-star connected components (``llm/dedup.py``), k-core peeling,
+label propagation, BFS and Bellman-Ford (``queries/mining.py``) and
+PageRank below -- is a ``step`` from one state DataFrame to the next,
+run by :func:`fixpoint`.  A loop whose STATIC edge list is joined on
+the same key every round (min-label CC, LPA, BFS, Bellman-Ford) lays
+it out once, before the loop, with ``layout.ckpt_partitioned`` on that
+key, so a round shuffles only the node-sized state side (PageRank's
+src-partitioned copy measured slower and keeps plain checkpoints;
+k-core and star CC rewrite the edges themselves).  The driver owns the
+rest:
+
+- Lineage cut: the state is ``localCheckpoint``-ed after every round
+  except the last (with a signature, see below).  Round N then never replays rounds 1..N-1, and a
+  state consumed twice by the next step (frontier filter + carry,
+  degree rollup + semi-join) is read from stored blocks instead of
+  re-executing its plan once per consumer (BFS measured 4.8 s with an
+  every-round cut vs 5.4 s every other round at sf0.1).
+- Convergence: with a ``signature`` the round's checkpoint is LAZY
+  and the one job that evaluates the signature aggregate also
+  materializes it -- one job per round, no comparison join.  The loop
+  stops on the first signature equal to the previous round's.  The
+  last round is cut too, since only its signature tells whether it
+  was the fixpoint.
+- Exactness: a signature may only repeat when the state did not
+  change, so stopping early is value-identical to running every
+  round (the oracles unroll the full round count).  That holds for a
+  monotone state: k-core edges only shrink and BFS hop sets only
+  grow, so ``count`` is exact; min-label labels and Bellman-Ford
+  distances never increase while the node set never shrinks, so
+  :func:`count_sum` (count, sum as DECIMAL(38,0) -- no overflow) is
+  exact.  Large-star/small-star rewires edges non-monotonically and
+  keeps its (count, xxhash-sum) fingerprint.  Label propagation and
+  PageRank are not monotone and run their fixed rounds unsigned.
+- Non-convergence: callers that need the fixpoint (connected
+  components) raise :class:`FixpointNotConverged`; the fixed-round
+  queries accept the budgeted state, exactly as their unrolled
+  oracles do.
+
+Fixed-point PageRank.  PageRank in floating point is NOT reproducible
+across engines or even across reruns at scale: the per-node sum of
+neighbor contributions is order-dependent in IEEE double, and
+partial-aggregation order changes with partitioning.  This
+implementation therefore runs the entire iteration in scaled BIGINT
+arithmetic:
 
     R0       = SCALE div N
     BASE     = (R0 * (100 - d)) div 100
@@ -14,42 +57,93 @@ with ``d`` the damping percentage (85 = the classic 0.85).  Every
 operation is exact integer math, so Spark and any ANSI engine produce
 bit-identical ranks -- which is how the DuckDB oracle can value-check an
 iterative graph algorithm (same trick as the md5-derived sketches).
-
-Scale shape per iteration: one join of ranks to edges on src (both
-sides hash-partitioned on the same key, so consecutive iterations reuse
-the exchange), one groupBy dst with map-side partial sums, one left
-join back to the node set for dangling-in-degree nodes.  Lineage is cut
-with ``localCheckpoint`` every few rounds exactly like the
-connected-components engines in ``llm/dedup.py`` (same pattern the
-GraphFrames/Pregel implementations use).  Iteration count is fixed --
-at 100 TB you run a budgeted number of supersteps, not to convergence.
+Scale shape per superstep: one join of ranks to edges on src, one
+groupBy dst with map-side partial sums, one left join back to the node
+set for dangling-in-degree nodes.  Iteration count is fixed -- at
+100 TB you run a budgeted number of supersteps, not to convergence.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.storagelevel import StorageLevel
+
+from .layout import spread_input
 
 SCALE = 10**9
+
+
+class FixpointNotConverged(RuntimeError):
+    """An iterative operator that needs its fixpoint ran out of rounds
+    before its signature repeated."""
+
+
+def fixpoint(state: DataFrame, step, rounds: int, signature=None):
+    """Run ``state = step(state)`` for up to ``rounds`` supersteps ->
+    ``(state, rounds_run, converged)``.
+
+    Without ``signature`` exactly ``rounds`` rounds run and
+    ``converged`` is False (nothing was tested).  With it, the loop
+    stops after the first round whose ``signature(state)`` equals the
+    previous round's; ``converged`` says whether that happened within
+    ``rounds``.  See the module docstring for the cut and exactness
+    contract."""
+    prev = None
+    for i in range(1, rounds + 1):
+        state = step(state)
+        if signature is None:
+            if i < rounds:
+                state = state.localCheckpoint(eager=True)
+            continue
+        state = state.localCheckpoint(eager=False)
+        sig = signature(state)
+        if sig == prev:
+            return state, i, True
+        prev = sig
+    return state, rounds, False
+
+
+def count_sum(col: str):
+    """Exact signature of a monotone state (module docstring): its row
+    count and the DECIMAL(38,0) sum of the integer column ``col``."""
+
+    def signature(state: DataFrame):
+        return tuple(
+            state.agg(
+                F.count(F.lit(1)), F.sum(F.col(col).cast("decimal(38,0)"))
+            ).first()
+        )
+
+    return signature
+
+
+def node_build(df: DataFrame) -> DataFrame:
+    """Join-strategy marker for the node-sized build side of a
+    per-round join (labels / frontier / keep sets): ``shuffle_hash``.
+    The side derives from a corpus-scaled subtree, so it must never be
+    FORCED to broadcast -- but a runtime-measured AQE broadcast (which
+    ignores this hint when the side measures tiny) stays available,
+    and sort-merge would re-sort the edge stream every round."""
+    return df.hint("shuffle_hash")
 
 
 def pagerank_fixed_point(
     edges: DataFrame,
     iterations: int = 8,
     damping_pct: int = 85,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Ranks for the directed graph in ``edges`` (columns src, dst).
 
     Edges must be pre-deduplicated; every node is expected to appear as
     a source at least once (an undirected co-occurrence graph satisfies
     this by construction).  Returns ``(node, rank)`` with rank in
-    SCALE-scaled fixed point.
+    SCALE-scaled fixed point; an empty edge list has no nodes and
+    yields an empty frame.
     """
-    # Checkpoint the static relations ONCE (same as connected_components
-    # does for its edge list): every superstep -- and every eager
-    # checkpoint of the rank chain -- would otherwise re-derive the
-    # edge construction subtree (explode + distinct over the raw input)
-    # from scratch.
+    # Checkpoint the static relations ONCE: every superstep -- and
+    # every checkpoint of the rank chain -- would otherwise re-derive
+    # the edge construction subtree (explode + distinct over the raw
+    # input) from scratch.
     e = edges.select("src", "dst").localCheckpoint(eager=True)
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = (
@@ -59,12 +153,13 @@ def pagerank_fixed_point(
         .localCheckpoint(eager=True)
     )
     n_nodes = nodes.count()  # bounded driver scalar: one integer
+    if n_nodes == 0:
+        return nodes.withColumn("rank", F.lit(0).cast("bigint"))
     r0 = SCALE // n_nodes
     base = (r0 * (100 - damping_pct)) // 100
-
-    ranks = nodes.withColumn("rank", F.lit(r0).cast("bigint"))
     contrib_edges = e.join(deg, "src").localCheckpoint(eager=True)
-    for i in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         inbound = (
             ranks.join(contrib_edges, ranks.node == contrib_edges.src)
             .select(
@@ -74,16 +169,16 @@ def pagerank_fixed_point(
             .groupBy("node")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = nodes.join(inbound, "node", "left").select(
+        return nodes.join(inbound, "node", "left").select(
             "node",
             (
                 F.lit(base)
                 + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
             ).cast("bigint").alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+
+    ranks = nodes.withColumn("rank", F.lit(r0).cast("bigint"))
+    return fixpoint(ranks, step, iterations)[0]
 
 
 def duck_pagerank_sql(
@@ -126,40 +221,30 @@ def duck_pagerank_sql(
     )
 
 
-def spread_pairs_input(df, key_col: str):
-    """Spread before CPU-heavy pair generation (guide §2.5: the
-    bench-scale single-row-group inputs run the self-join's pair
-    emission in ONE task).  Thin alias of
-    :func:`..operators.layout.spread_input` -- see THAT docstring for
-    the canonical rationale and the no-op-at-scale auto-detect (r11
-    ADVICE: one copy of the rationale).  Hash-partitioning on the join
-    key additionally co-partitions both self-join sides through one
-    shared (reused) exchange."""
-    from .layout import spread_input
-
-    return spread_input(df, key_col)
-
-
 def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
-    """Support-thresholded part co-purchase edge list (x < y), the
-    shared substrate of the support-2 graph queries (LPA, Adamic-Adar,
-    Bellman-Ford, Hill alpha).  k-core and the BFS rings run on the
-    UNTHRESHOLDED distinct-pair variant and keep their own builds.
+    """Part co-purchase edge list (x < y, ``cnt`` = orders shared) with
+    support >= ``min_support`` -- the one lineitem self-join on the
+    order key behind every co-purchase graph query.  Support 2 (LPA,
+    Adamic-Adar, Bellman-Ford, Hill alpha) keeps the repeat-signal
+    graph; support 1 (k-core, BFS) is the plain distinct pair list.
 
-    Checkpointed EAGERLY before returning: the edge list is always
-    consumed through several different projections (und directions,
-    degree rollups, anti-join legs), which defeats exchange reuse and
-    re-executed the lineitem self-join once PER CONSUMER before the
-    cut -- the round-4 rehearsal measured 24 GB of spill from exactly
-    that in the first Adamic-Adar cut.  With ``weight=True`` the edge
-    carries ``w = 1000000 DIV support`` (integer, strong ties cheap --
-    the Bellman-Ford cost) instead of being support-filtered only.
+    The input is spread first (``layout.spread_input``: a compact
+    lineitem scan would otherwise run the whole pair emission in one
+    task).  Checkpointed EAGERLY before returning: the edge list is
+    always consumed through several different projections (und
+    directions, degree rollups, anti-join legs), which defeats exchange
+    reuse and re-executed the lineitem self-join once PER CONSUMER
+    before the cut -- the round-4 rehearsal measured 24 GB of spill
+    from exactly that in the first Adamic-Adar cut.  The unthresholded
+    list is stored DISK_ONLY: it is corpus-scaled under densification
+    (fixed part catalog, fact-scaled orders), and materializing it into
+    heap-priced MEMORY_AND_DISK blocks OOM'd a 48 g heap at sf100; the
+    support-thresholded list keeps the memory default.  With
+    ``weight=True`` the edge carries ``w = 1000000 DIV support``
+    (integer, strong ties cheap -- the Bellman-Ford cost) instead of
+    ``cnt``.
     """
-    from pyspark.sql import functions as F
-
-    li = spread_pairs_input(
-        lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
+    li = spread_input(lineitem.select("l_orderkey", "l_partkey"), "l_orderkey")
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
     b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
     base = (
@@ -173,4 +258,5 @@ def copurchase_edges(lineitem, min_support: int = 2, weight: bool = False):
         base = base.select(
             "x", "y", F.expr("CAST(1000000 DIV cnt AS BIGINT)").alias("w")
         )
-    return base.localCheckpoint(eager=True)
+    level = StorageLevel.DISK_ONLY if min_support == 1 else None
+    return base.localCheckpoint(eager=True, storageLevel=level)

@@ -31,7 +31,7 @@ def spread_input(df: DataFrame, key_col: str) -> DataFrame:
     can split, because parquet scans are row-group-atomic).  The
     canonical form of the auto-detect idiom used by
     ``llm/dedup._exploded_shingles``, ``operators/graph.
-    spread_pairs_input`` and ``llm/multimodal._spread_codec_input``:
+    copurchase_edges`` and ``llm/multimodal._spread_codec_input``:
     well-partitioned inputs -- the 100 TB case -- skip the shuffle
     entirely, so nothing here is tuned to local mode.  Hashing on a
     stable key keeps the spread deterministic under retries.

@@ -24,13 +24,16 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.numeric import dec, portable_round
 from ..operators import ranks as RK
-from ..operators.layout import ckpt_partitioned
+from ..operators.layout import ckpt_partitioned, spread_input
 from ..operators.sampling import duck_hash_gate, hash_gate
 from ..pinned import pin
 from ..functions.text import tokens
 from ..operators.graph import (
     copurchase_edges,
+    count_sum,
     duck_pagerank_sql,
+    fixpoint,
+    node_build,
     pagerank_fixed_point,
 )
 from ..operators.quality import (
@@ -173,12 +176,10 @@ SELECT src, dst FROM (
 def q_textrank_tokens(spark, sf_dir):
     """Scale shape: edge construction is explode + distinct (one
     shuffle on the pair); each superstep is rank-join-agg on keys that
-    stay hash-partitioned round to round, lineage cut every 4 rounds.
+    stay hash-partitioned round to round, lineage cut every round.
     Vocabulary nodes are the unit of work -- a real corpus has ~1e7
     nodes and ~1e9 edges, well inside this plan's shape (same pattern
     as connected components in llm/dedup.py)."""
-    from ..operators.layout import spread_input
-
     docs = spread_input(cat(spark, sf_dir).documents, "doc_id")
     toks = docs.select(tokens(F.lower(F.col("text"))).alias("toks"))
     pairs = toks.select(
@@ -923,17 +924,6 @@ def q_triangle_clustering(spark, sf_dir):
 # k-core decomposition (iterative peeling)
 # --------------------------------------------------------------------------
 
-def _node_build(df):
-    """Join-strategy marker for the node-sized build side of a
-    per-round iterative join (labels / frontier / keep sets):
-    ``shuffle_hash`` (r10) -- the side derives from a corpus-scaled
-    subtree so it must never be FORCED to broadcast, but its
-    per-partition hash build is bounded by the node set.  One
-    definition so probe scripts can A/B the strategy by
-    monkeypatching (the llm/dedup._node_build twin)."""
-    return df.hint("shuffle_hash")
-
-
 _KCORE_K, _KCORE_ROUNDS = 65, 6
 
 # Co-purchase graph: parts appearing in the same order.  (The token
@@ -1000,41 +990,16 @@ ORDER BY core_degree DESC, node"""
     ),
 )
 def q_kcore_copurchase(spark, sf_dir):
-    """Edge build: lineitem self-join on the order key (one shuffle,
-    spread across the parallelism when the scan is under-partitioned).
-    Each peeling round is one shuffle on the node key (degree count)
-    plus two SHUFFLE-HASH semi-join filters of the edge list (the hint
-    was dropped mid-r11 for AQE's runtime choice, then RESTORED on the
-    three-scale A/B: -0.6-0.8 s at sf0.1, wash at sf10, +17% at sf100
-    without it -- see the inline comment).  Lineage is cut EVERY
-    round: edges is consumed
-    twice next round (degree rollup + semi-join chain), and without the
-    cut each consumer re-executes the previous round's plan (the BFS
-    every-round lesson, measured there at 4.8 s vs 5.4 s).  Round 0 is
-    cut on DISK (the unthresholded pair list is corpus-scaled under
-    densification -- the BFS DISK_ONLY rationale); later rounds hold
-    the k-shrunk list and keep the memory default; each round's
-    materializing action doubles as a convergence check (count
-    unchanged = fixpoint -> remaining rounds are the identity).  At
+    """Edge build: ``copurchase_edges`` at support 1 (stored
+    DISK_ONLY).  Each peeling round is one ``fixpoint`` superstep: one
+    shuffle on the node key (degree count) plus two SHUFFLE-HASH
+    semi-join filters of the edge list; the edge count is the
+    convergence signature, so the loop exits at the fixpoint.  At
     100 TB the peeling loop runs the same per-round plan until that
     fixpoint."""
-    from ..operators.graph import spread_pairs_input
+    edges = copurchase_edges(cat(spark, sf_dir).lineitem, min_support=1)
 
-    li = spread_pairs_input(
-        cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    prev_n = None
-    for i in range(1, _KCORE_ROUNDS + 1):
+    def peel(edges):
         deg = (
             edges.select(F.col("x").alias("node"))
             .unionAll(edges.select(F.col("y").alias("node")))
@@ -1042,44 +1007,26 @@ def q_kcore_copurchase(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= _KCORE_K).select("node")
-        # shuffle_hash RESTORED (r11, three-scale A/B with
-        # scripts/ab_kcore_sf10_r11.py): dropping the hint for AQE's
-        # runtime choice read 0.6-0.8 s faster at sf0.1 and a wash at
-        # sf10 (13.5 vs 14.0 interleaved), but at sf100 -- fresh JVM
-        # per leg, the standing one-JVM-per-query methodology -- the
-        # no-hint leg cost +17% (161.0 vs 137.3 s; the densified edge
-        # stream pays per-round sort/strategy overhead once its
-        # partitions outgrow AQE's conversion windows).  The hint keeps
-        # the SHJ per-partition build bounded by the node set (keep
-        # derives from a corpus-scaled rollup, so it may never be
-        # FORCED to broadcast).
-        edges = (
+        # shuffle_hash RESTORED after a three-scale A/B: dropping the
+        # hint for AQE's runtime choice read 0.6-0.8 s faster at sf0.1
+        # and a wash at sf10 (13.5 vs 14.0 interleaved), but at sf100
+        # -- fresh JVM per leg -- the no-hint leg cost +17% (161.0 vs
+        # 137.3 s; the densified edge stream pays per-round sort/
+        # strategy overhead once its partitions outgrow AQE's
+        # conversion windows).
+        return (
             edges.join(
-                keep.withColumnRenamed("node", "x").hint("shuffle_hash"),
-                "x",
-                "left_semi",
+                node_build(keep.withColumnRenamed("node", "x")), "x", "left_semi"
             )
             .join(
-                keep.withColumnRenamed("node", "y").hint("shuffle_hash"),
-                "y",
-                "left_semi",
+                node_build(keep.withColumnRenamed("node", "y")), "y", "left_semi"
             )
             .select("x", "y")
         )
-        if i < _KCORE_ROUNDS:
-            # r11: fold a convergence check into the round's one
-            # materializing action (the connected_components trick --
-            # lazy checkpoint + count in the same job, so this costs
-            # no extra job vs the eager checkpoint it replaces).
-            # Peeling only ever REMOVES edges, so an unchanged count
-            # means an unchanged edge set and every remaining round is
-            # the identity -- exiting early is value-identical to the
-            # oracle's full unrolling.
-            edges = edges.localCheckpoint(eager=False)
-            n = edges.count()
-            if n == prev_n:
-                break
-            prev_n = n
+
+    edges = fixpoint(
+        edges.select("x", "y"), peel, _KCORE_ROUNDS, signature=lambda e: e.count()
+    )[0]
     return (
         edges.select(F.col("x").alias("node"))
         .unionAll(edges.select(F.col("y").alias("node")))
@@ -3087,21 +3034,16 @@ FROM m, intra, dsum
     ),
 )
 def q_modularity_brand_copurchase(spark, sf_dir):
-    """Edge build = the k-core query's self-join (exchange-reused
-    across the degree and intra-edge branches); the brand lookup is a
-    CORPUS-SCALED part projection, so its joins carry no broadcast
-    hint (estimator/AQE broadcasts at test SFs, falls back to shuffle
-    at 100x); the rest is three scalar aggregates."""
-    from ..operators.graph import spread_pairs_input
-
+    """Edge build = the support-1 co-purchase self-join, kept INLINE
+    (exchange-reused across the degree, intra-edge and edge-count
+    branches): the checkpointed ``copurchase_edges`` build measured
+    slower here (sf0.1, 4-CPU local mode, interleaved warm runs:
+    5.1-5.7 s against 3.4-5.1 s inline).  The brand lookup is a
+    CORPUS-SCALED part projection, so its joins carry no broadcast hint
+    (estimator/AQE broadcasts at test SFs, falls back to shuffle at
+    100x); the rest is three scalar aggregates."""
     c = cat(spark, sf_dir)
-    # r11: the one co-purchase edge build that still ran its pair
-    # emission in the single scan task (k-core/BFS/copurchase_edges
-    # gained the spread in r10; this inline build was missed).  Same
-    # no-op-at-scale auto-detect (layout.spread_input).
-    li = spread_pairs_input(
-        c.lineitem.select("l_orderkey", "l_partkey"), "l_orderkey"
-    )
+    li = spread_input(c.lineitem.select("l_orderkey", "l_partkey"), "l_orderkey")
     a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
     bb = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
     edges = (
@@ -3350,6 +3292,40 @@ ORDER BY n_nodes DESC, community LIMIT 20"""
     )
 
 
+def _lpa_round(und, labels):
+    """One synchronous label-propagation superstep over ``und`` (node,
+    nb), stored hash-partitioned by nb so the vote join streams it with
+    no exchange: only the node-sized label side shuffles."""
+    votes = (
+        und.join(
+            node_build(
+                labels.select(F.col("node").alias("nb"), F.col("lbl").alias("nlbl"))
+            ),
+            "nb",
+        )
+        .groupBy("node", "nlbl")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    # argmax by (c DESC, nlbl ASC) as min(struct(-c, nlbl)): struct
+    # ordering is lexicographic, so this is value-identical to a
+    # row_number window -- but it aggregates map-side to <= one row per
+    # node per partition and never sorts, where the window re-shuffled
+    # the (node, nlbl) vote stream a second time and sorted every
+    # partition.
+    return (
+        votes.groupBy("node")
+        .agg(
+            F.min(
+                F.struct(
+                    F.negate(F.col("c")).alias("negc"),
+                    F.col("nlbl").alias("nlbl"),
+                )
+            ).alias("__m")
+        )
+        .select("node", F.col("__m.nlbl").alias("lbl"))
+    )
+
+
 @query(
     "q_lpa_communities",
     oracle=_duck_lpa_sql(_LPA_ROUNDS),
@@ -3367,63 +3343,21 @@ ORDER BY n_nodes DESC, community LIMIT 20"""
 )
 def q_lpa_communities(spark, sf_dir):
     """Each round is ONE shuffle on the node key: the (node, label)
-    vote count and the argmax window share the same partitioning, and
-    the neighbour join keys on the node side of the undirected edge
-    list.  Lineage is cut every other round (the k-core convention) so
-    the unrolled loop cannot stack exponential plan growth.  At 100 TB
-    LPA is THE community algorithm that survives -- no global modular
-    optimization, just per-node majority votes."""
+    vote count and the argmax share the same partitioning, and the
+    neighbour join keys on the nb side of the undirected edge list,
+    stored partitioned by nb.  Rounds run through ``fixpoint`` with no
+    signature (label propagation is not monotone), cut after each.  At
+    100 TB LPA is THE community algorithm that survives -- no global
+    modular optimization, just per-node majority votes."""
     edges = copurchase_edges(cat(spark, sf_dir).lineitem).select("x", "y")
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb")
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb")))
-    # r11: the static und list is joined on nb EVERY round; storing it
-    # hash-partitioned by nb (layout.ckpt_partitioned -- a plain
-    # checkpoint under AQE forgets its layout) lets each round's votes
-    # join stream it with no exchange, so only the node-sized label
-    # side shuffles per round.  Same single materialization as the
-    # plain eager checkpoint it replaces.
     und = ckpt_partitioned(und, "nb")
     labels = und.select("node").distinct().select(
         "node", F.col("node").alias("lbl")
     )
-    for i in range(1, _LPA_ROUNDS + 1):
-        # shuffle_hash on the node-sized label side (r10): sort-merge
-        # re-sorted the edge-sized und stream every round; the label
-        # side can never broadcast (corpus-scaled subtree) but builds a
-        # bounded per-partition hash map.
-        votes = (
-            und.join(
-                _node_build(
-                    labels.select(
-                        F.col("node").alias("nb"), F.col("lbl").alias("nlbl")
-                    )
-                ),
-                "nb",
-            )
-            .groupBy("node", "nlbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        # argmax by (c DESC, nlbl ASC) as min(struct(-c, nlbl)): struct
-        # ordering is lexicographic, so this is value-identical to the
-        # row_number window it replaces (r10 optimization, guide §2.4) --
-        # but it aggregates map-side to <= one row per node per partition
-        # and never sorts, where the window re-shuffled the (node, nlbl)
-        # vote stream a second time and sorted every partition.
-        labels = (
-            votes.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        F.negate(F.col("c")).alias("negc"),
-                        F.col("nlbl").alias("nlbl"),
-                    )
-                ).alias("__m")
-            )
-            .select("node", F.col("__m.nlbl").alias("lbl"))
-        )
-        if i % 2 == 0 and i < _LPA_ROUNDS:
-            labels = labels.localCheckpoint(eager=True)
+    labels = fixpoint(labels, lambda lb: _lpa_round(und, lb), _LPA_ROUNDS)[0]
     return (
         labels.groupBy(F.col("lbl").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
@@ -3572,6 +3506,38 @@ def q_psi_value_drift(spark, sf_dir):
 # Multi-source BFS hop distance (reachability rings)
 # --------------------------------------------------------------------------
 
+def _relax(und, cost, dist):
+    """One frontier relaxation superstep, shared by BFS (``cost`` = 1)
+    and Bellman-Ford (``cost`` = the edge weight ``w``).
+
+    ``dist`` is (node, dist, fresh); only the ``fresh`` nodes -- those
+    reached or improved last round -- expand: a node's proposals depend
+    only on its dist, so re-expanding an unchanged node re-proposes
+    already-applied candidates.  The min rollup carries every labelled
+    node forward and recomputes ``fresh`` in the same node-keyed
+    aggregate (``od`` = the node's previous dist, NULL when newly
+    reached), so no comparison join is needed.  ``und`` (node, nb[, w])
+    is stored partitioned by node, so the frontier join streams it with
+    no exchange."""
+    frontier = dist.filter("fresh").select("node", "dist")
+    cand = node_build(frontier).join(und, "node").select(
+        F.col("nb").alias("node"),
+        (F.col("dist") + cost).alias("dist"),
+        F.lit(None).alias("od"),
+    )
+    return (
+        dist.select("node", "dist", F.col("dist").alias("od"))
+        .unionAll(cand)
+        .groupBy("node")
+        .agg(F.min("dist").alias("dist"), F.min("od").alias("od"))
+        .select(
+            "node",
+            "dist",
+            (F.col("od").isNull() | (F.col("dist") < F.col("od"))).alias("fresh"),
+        )
+    )
+
+
 _BFS_ROUNDS = 4
 _BFS_SEEDS = 5  # the top-degree hub nodes
 
@@ -3628,94 +3594,37 @@ ORDER BY hop"""
     ),
 )
 def q_bfs_hops_from_hubs(spark, sf_dir):
-    """Each round is one node-keyed shuffle (the min-hop rollup); the
-    frontier join keys on the same node column, so AQE reuses the
-    partitioning round to round.  Relaxation carries ALL labelled
-    nodes forward (hop set only ever grows), so rounds are idempotent
-    past the diameter -- the fixed unrolling stays deterministic.
-    Lineage is cut every round (measured faster than the k-core
-    every-other cadence; see the inline comment)."""
-    from ..operators.graph import spread_pairs_input
+    """Each round is one ``fixpoint`` superstep of :func:`_relax` with
+    unit cost: a node-keyed min-hop rollup over the frontier join; the
+    reached-node count is the convergence signature, so rounds past
+    the diameter are skipped.
 
-    li = spread_pairs_input(
-        cat(spark, sf_dir).lineitem.select("l_orderkey", "l_partkey"),
-        "l_orderkey",
-    )
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "o")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("x"), F.col("pb").alias("y"))
-        .distinct()
-    )
-    # Checkpoint EDGES (the dedup output), then derive und as two
-    # projections of the checkpointed relation -- never checkpoint
-    # the union itself.  Two r10 sf100 catches live here:
-    # (1) DISK_ONLY, not the default MEMORY_AND_DISK: the
-    #     unthresholded co-purchase edge list is corpus-scaled under
-    #     densification (fixed part catalog, fact-scaled orders), and
-    #     the first r10 leg OOM'd a 48 g heap materializing it into
-    #     heap-priced block storage.  k-core survives the same decade
-    #     because its first cut lands AFTER two degree peels have
-    #     shrunk the list; BFS needs the full graph every round, so
-    #     its blocks belong on disk.
-    # (2) checkpointing und = union(proj(edges), proj(edges)) ran the
-    #     corpus-wide dedup TWICE: ReusedExchange dedupes the shuffle,
-    #     but each union branch re-executes its own post-shuffle
-    #     HashAggregate over the full 1.2B-row shuffle read (measured:
-    #     edge build 96 s at sf100, query 253 s).  Checkpointing the
-    #     dedup output makes both und branches map-only reads of the
-    #     stored blocks.  Bounded checkpoints (the node-keyed hops
-    #     below) keep the memory default.
-    edges = edges.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
+    The edge list comes from ``copurchase_edges`` at support 1, stored
+    DISK_ONLY.  und is derived as two projections of that checkpoint --
+    never by checkpointing the union of an unmaterialized dedup: there
+    ReusedExchange dedupes the shuffle, but each union branch
+    re-executes its own post-shuffle HashAggregate over the full
+    shuffle read (measured at sf100: edge build 96 s, query 253 s).
+    und itself is stored hash-partitioned by node (the frontier join
+    and the degree rollup both key on it), on DISK like the edge list
+    it doubles (2|E| rows of 2 bigints, catalog-bounded)."""
+    edges = copurchase_edges(cat(spark, sf_dir).lineitem, min_support=1)
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb")
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb")))
-    # r11: store und itself, hash-partitioned by node
-    # (layout.ckpt_partitioned): every round's frontier join AND the
-    # degree rollup key on node, so the stored layout removes the
-    # und-wide exchange from each of them and each round reads und's
-    # own blocks once instead of re-reading the edge checkpoint twice
-    # through the union.  Safe w.r.t. the sf100 catches above: und
-    # derives from the ALREADY-CHECKPOINTED dedup output (map-only
-    # union branches -- the double-HashAggregate re-execution cannot
-    # come back), and the copy stays on DISK like the edge list it
-    # doubles (2|E| rows of 2 bigints; the co-purchase pair set is
-    # catalog-bounded, so the extra disk is bounded too).
     und = ckpt_partitioned(und, "node", storage_level=StorageLevel.DISK_ONLY)
     deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     seeds = (
         deg.orderBy(F.desc("d"), "node")
         .limit(_BFS_SEEDS)
-        .select("node")
+        .select("node", F.lit(0).alias("dist"), F.lit(True).alias("fresh"))
     )
-    hops = seeds.select("node", F.lit(0).alias("hop"))
-    for i in range(1, _BFS_ROUNDS + 1):
-        # Frontier-only expansion: only nodes labelled LAST round can
-        # improve a neighbour (an interior node's neighbours already
-        # hold hop <= interior+1), so expanding just the (i-1)-ring
-        # reaches the identical min-hop fixpoint as the oracle's full
-        # relaxation at a fraction of the join volume -- the round-1
-        # join is 5 seed rows, not the whole labelled set.
-        frontier = hops.filter(F.col("hop") == i - 1).select("node")
-        # shuffle_hash on the node-sized frontier (r10): sort-merge
-        # re-sorted the full und stream every round.
-        expanded = hops.unionAll(
-            _node_build(frontier).join(und, "node").select(
-                F.col("nb").alias("node"), F.lit(i).alias("hop")
-            )
-        )
-        hops = expanded.groupBy("node").agg(F.min("hop").alias("hop"))
-        # Cut lineage EVERY round: hops is consumed twice next round
-        # (frontier filter + union carry); measured at sf0.1 the
-        # every-round cut beats the every-other-round k-core cadence
-        # (4.8 s vs 5.4 s) because the doubled subtree re-executes its
-        # rollup rather than collapsing to a ReusedExchange.
-        if i < _BFS_ROUNDS:
-            hops = hops.localCheckpoint(eager=True)
+    hops = fixpoint(
+        seeds,
+        lambda h: _relax(und, F.lit(1), h),
+        _BFS_ROUNDS,
+        signature=lambda h: h.count(),
+    )[0].select("node", F.col("dist").alias("hop"))
     rings = hops.groupBy("hop").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_nodes")
     )
@@ -4057,54 +3966,35 @@ ORDER BY dist, node LIMIT 20"""
     ),
 )
 def q_bellman_ford_cheapest(spark, sf_dir):
-    """Each round is one node-keyed min rollup, and only the nodes
-    IMPROVED last round expand (a node's proposals depend only on its
-    dist, so re-expanding unchanged nodes re-proposes already-applied
-    candidates -- the BFS frontier argument, weighted).  Lineage is
-    cut every round; edge list checkpointed once (five-consumer
-    exchange-reuse lesson).  At 100 TB this is THE shortest-path
-    shape that survives: no priority queue, just k scans of a
-    node-partitioned relation."""
+    """Each round is one ``fixpoint`` superstep of :func:`_relax` with
+    the edge weight as cost: a node-keyed min rollup in which only the
+    nodes improved last round expand; ``count_sum('dist')`` is the
+    convergence signature.  und is support-thresholded, so its
+    node-partitioned copy keeps the memory default.  At 100 TB this is
+    THE shortest-path shape that survives: no priority queue, just k
+    scans of a node-partitioned relation."""
     edges = copurchase_edges(cat(spark, sf_dir).lineitem, weight=True)
     und = edges.select(
         F.col("x").alias("node"), F.col("y").alias("nb"), "w"
     ).unionAll(edges.select(F.col("y").alias("node"), F.col("x").alias("nb"), "w"))
-    # r11: store und hash-partitioned by node (layout.ckpt_partitioned):
-    # the relaxation join and the seed-degree rollup both key on node,
-    # so the stored layout removes the und-wide exchange from every
-    # round and und's two union reads of the edge checkpoint happen
-    # once instead of per round.  und is support-thresholded (memory
-    # default is fine -- the unthresholded BFS twin is the DISK case).
     und = ckpt_partitioned(und, "node")
     deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     src = (
         deg.orderBy(F.desc("d"), "node")
         .limit(1)
-        .select("node")
+        .select(
+            "node",
+            F.lit(0).cast("bigint").alias("dist"),
+            F.lit(True).alias("fresh"),
+        )
     )
-    dist = src.select("node", F.lit(0).cast("bigint").alias("dist"))
-    frontier = dist
-    for i in range(1, _BF_ROUNDS + 1):
-        # shuffle_hash on the node-sized frontier (r10, the BFS/LPA
-        # rationale): no per-round sort of the und stream.
-        cand = _node_build(frontier).join(und, "node").select(
-            F.col("nb").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        new = (
-            dist.unionAll(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = (
-            new.join(
-                dist.select("node", F.col("dist").alias("od")), "node", "left"
-            )
-            .filter(F.col("od").isNull() | (F.col("dist") < F.col("od")))
-            .select("node", "dist")
-        )
-        dist = new
-    return dist.orderBy("dist", "node").limit(20)
+    dist = fixpoint(
+        src,
+        lambda d: _relax(und, F.col("w"), d),
+        _BF_ROUNDS,
+        signature=count_sum("dist"),
+    )[0]
+    return dist.select("node", "dist").orderBy("dist", "node").limit(20)
 
 
 # --------------------------------------------------------------------------

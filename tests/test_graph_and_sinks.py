@@ -22,6 +22,10 @@ from etl_onprem_to_cloud_spark.llm.dedup import (
     connected_components_star,
     minhash_lsh_candidate_pairs,
 )
+from etl_onprem_to_cloud_spark.operators.graph import (
+    FixpointNotConverged,
+    fixpoint,
+)
 from etl_onprem_to_cloud_spark.operators.layout import compact_files
 from etl_onprem_to_cloud_spark.sources.io import load_table
 from etl_onprem_to_cloud_spark.streaming.sinks import (
@@ -74,6 +78,108 @@ def test_star_cc_nonconvergence_raises(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components_star(pairs, max_iterations=1)
+
+
+def _capped_increment(df):
+    return df.select(F.least(F.col("id") + 1, F.lit(3)).alias("id"))
+
+
+def test_fixpoint_stops_on_first_repeated_signature(spark):
+    """0 -> 1 -> 2 -> 3 -> 3: round 4 repeats round 3's signature."""
+    seen = []
+
+    def signature(df):
+        seen.append(df.first()["id"])
+        return seen[-1]
+
+    state, rounds_run, converged = fixpoint(
+        spark.range(1), _capped_increment, 10, signature=signature
+    )
+    assert (rounds_run, converged) == (4, True)
+    assert seen == [1, 2, 3, 3]
+    assert state.first()["id"] == 3
+
+    # A budget that ends before the repeat reports non-convergence.
+    state, rounds_run, converged = fixpoint(
+        spark.range(1), _capped_increment, 3, signature=lambda df: df.first()["id"]
+    )
+    assert (rounds_run, converged, state.first()["id"]) == (3, False, 3)
+
+
+def test_fixpoint_without_signature_runs_every_round(spark):
+    calls = []
+
+    def step(df):
+        calls.append(1)
+        return _capped_increment(df)
+
+    state, rounds_run, converged = fixpoint(spark.range(1), step, 5)
+    assert (len(calls), rounds_run, converged) == (5, 5, False)
+    assert state.first()["id"] == 3
+
+
+def test_cc_nonconvergence_raises_named_error(spark):
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "id_a: bigint, id_b: bigint"
+    )
+    for cc in (connected_components, connected_components_star):
+        with pytest.raises(FixpointNotConverged, match="did not converge"):
+            cc(pairs, max_iterations=1)
+
+
+def test_lpa_round_streams_partitioned_edges_without_exchange(spark):
+    """The executed plan of one LPA round reads the ckpt_partitioned
+    edge list straight into the vote join: only the label side
+    shuffles.  Broadcasts are off so the join must co-partition; a
+    plain checkpoint of the same edges is the positive control."""
+    from etl_onprem_to_cloud_spark.operators.layout import ckpt_partitioned
+    from etl_onprem_to_cloud_spark.queries.mining import _lpa_round
+
+    def edge_side(df):
+        df.collect()
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        i = next(
+            k for k, ln in enumerate(lines)
+            if "Scan ExistingRDD" in ln and ",nb#" in ln
+        )
+
+        def depth(ln):
+            return len(ln) - len(ln.lstrip(" :+-"))
+
+        path, d = [], depth(lines[i])
+        for ln in reversed(lines[:i]):
+            if depth(ln) < d:
+                path.append(ln.strip(" :+-"))
+                d = depth(ln)
+                if "Join" in ln:
+                    return path
+        raise AssertionError("edge scan is not under a join")
+
+    pairs = [(i, (i * 7 + 3) % 50) for i in range(50)]
+    und = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "node bigint, nb bigint"
+    )
+    labels = spark.createDataFrame(
+        [(i, i) for i in range(50)], "node bigint, lbl bigint"
+    )
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        stored = edge_side(_lpa_round(ckpt_partitioned(und, "nb"), labels))
+        plain = edge_side(_lpa_round(und.localCheckpoint(eager=True), labels))
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert not any("Exchange" in n for n in stored), stored
+    assert any("Exchange" in n for n in plain), plain
 
 
 def test_compact_files_file_count(spark, tmp_path):

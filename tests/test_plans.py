@@ -467,7 +467,7 @@ def test_mining_queries_bounded_shuffles_no_udf(name, max_shuffles, spark, sf_di
 
 def test_textrank_iterations_bounded_and_jvm_side(spark, sf_dir):
     """8 supersteps of rank-join-agg: the final plan carries the
-    post-checkpoint rounds only (lineage is cut every 4), all JVM-side,
+    last round only (lineage is cut every round), all JVM-side,
     no cartesian anywhere in the iteration."""
     df = QUERIES["q_textrank_tokens"].fn(spark, sf_dir)
     assert not has_python_udf(df)
@@ -633,10 +633,8 @@ def test_timeseries_bars_bounded_shuffles(name, max_shuffles, spark, sf_dir):
     # broadcasts (their BroadcastNestedLoopJoin is the sanctioned
     # broadcast-crossJoin of totals, not a fact-fact nested loop).
     ("q_nb_lang_classifier", 22),
-    # k-core: edge build (order-key self-join + distinct) then 6
-    # peeling rounds of degree-agg + two semi-joins; lineage is cut
-    # every other round so the runtime plan stays shallow even though
-    # the static explain stacks the unrolled rounds.
+    # k-core: historical ceiling; the tight fixpoint-era bound is in
+    # test_fixpoint_queries_plan_shape.
     ("q_kcore_copurchase", 52),
     # ACF: hourly agg, 1-row mean/variance broadcast, hour-lag join,
     # per-lag reduce.
@@ -785,7 +783,7 @@ def test_png_decode_is_arrow_batched_map_only(spark, sf_dir):
     ("q_wilson_ctr_ranking", 4),
     # modularity: edge build (exchange-reused) + degree/brand rollups
     # + scalar joins; the static count includes each reuse.  12 -> 15
-    # (r11): the edge build gained the spread_pairs_input repartition
+    # (r11): the edge build gained the layout.spread_input repartition
     # (A/B 1.60 vs 2.30 s; no-op at scale), whose ONE exchange prints
     # once per edge-build consumer (intra / degree / m) in the
     # unexecuted plan -- same per-reuse reprint the CF note above
@@ -840,8 +838,8 @@ def test_r04_batch4_plan_shape(name, max_shuffles, spark, sf_dir):
     # DSIR: O(B)-bucket model rollups (re-expanded per pool in plan
     # text) + the per-doc weight rollup + the TakeOrdered top-k.
     ("q_dsir_importance_resampling", 6),
-    # LPA: edge build (order-key join + pair rollup) before the
-    # checkpoint cut, then ~2 node-keyed exchanges per visible round.
+    # LPA: historical ceiling; the tight fixpoint-era bound is in
+    # test_fixpoint_queries_plan_shape.
     ("q_lpa_communities", 10),
     # Holt-Winters: the daily rollup is the only event-scale exchange
     # (plus the single-row fold's trivial singleton).
@@ -851,14 +849,34 @@ def test_r04_batch4_plan_shape(name, max_shuffles, spark, sf_dir):
     ("q_psi_value_drift", 5),
     # conformal: the daily rollup + calendar-sized windows/joins.
     ("q_conformal_forecast_interval", 8),
-    # BFS: plan TEXT re-expands the frontier subtree under each
-    # union branch past the checkpoint cut (runtime collapses the
-    # identical node-keyed exchanges to ReusedExchange).
+    # BFS: historical ceiling; the tight fixpoint-era bound is in
+    # test_fixpoint_queries_plan_shape.
     ("q_bfs_hops_from_hubs", 20),
     # Neyman: one 20-group stats rollup + strata-sized windows.
     ("q_neyman_allocation", 5),
 ])
 def test_r04_batch5_plan_shape(name, max_shuffles, spark, sf_dir):
+    df = QUERIES[name].fn(spark, sf_dir)
+    assert shuffle_count(df) <= max_shuffles
+    assert not has_python_udf(df)
+    assert "CartesianProduct" not in explain_str(df, "simple")
+
+
+@pytest.mark.parametrize("name,max_shuffles", [
+    # k-core: the edge build and every peeling round run inside
+    # operators/graph.fixpoint (a checkpoint after every round), so the
+    # returned plan is only the final degree rollup + ordering.
+    ("q_kcore_copurchase", 2),
+    # LPA: operators/graph.fixpoint cuts lineage after every round
+    # but the last, so only the last round's node-keyed exchanges and
+    # the community rollup + ordering remain visible.
+    ("q_lpa_communities", 4),
+    # BFS: every relaxation round is checkpointed by
+    # operators/graph.fixpoint, so only the hop-ring rollup and the
+    # ordering remain.
+    ("q_bfs_hops_from_hubs", 2),
+])
+def test_fixpoint_queries_plan_shape(name, max_shuffles, spark, sf_dir):
     df = QUERIES[name].fn(spark, sf_dir)
     assert shuffle_count(df) <= max_shuffles
     assert not has_python_udf(df)

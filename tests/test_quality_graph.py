@@ -102,6 +102,13 @@ class TestFixedPointPageRank:
         duck_ranks = dict(duckdb.connect().execute(sql).fetchall())
         assert spark_ranks == duck_ranks
 
+    def test_empty_edge_list_yields_empty_ranks(self, spark):
+        e = spark.createDataFrame([], "src string, dst string")
+        out = pagerank_fixed_point(e)
+        assert out.columns == ["node", "rank"]
+        assert out.schema["rank"].dataType.simpleString() == "bigint"
+        assert out.collect() == []
+
 
 class TestPortableRound:
     @pytest.mark.parametrize("x,n", [(68.92875, 4), (0.5, 0), (1.23456785, 6)])
